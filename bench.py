@@ -27,7 +27,7 @@ if REPO_ROOT not in sys.path:
 _CAL_REF_SEC = 0.18
 
 # Median of the SHUFFLE calibration probe (measured round 12 — see
-# _calibrate_shuffle). The CPU probe above is pure codegen and blind to
+# probe_shuffle). The CPU probe above is pure codegen and blind to
 # degraded shuffle/disk service: twice (r10 extras, r12 headline) a
 # uniform inflation of shuffle-heavy keys with a flat CPU ratio took
 # extra adjudication because nothing in the artifact distinguished
@@ -36,93 +36,77 @@ _CAL_REF_SEC = 0.18
 # both flat + one key moved => real regression.
 _SHUF_REF_SEC = 0.79
 
-# Headline set: one representative per heavy operator family; extended as
-# families land. Order: cheap scan first (warms the JVM/code paths).
-HEADLINE = [
-    "scan_parquet",
-    "agg_groupby",
-    "agg_rollup_cube_gsets",
-    "agg_maxby_latest",
-    "join_multiway",
-    "join_bucketed_colocated",
-    "join_skew_salted",
-    "join_asof_backward",
-    "join_range_banded",
-    "cdc_incremental_agg",
-    "topk_per_group",
-    "win_running_frame",
-    "win_range_interval",
-    "rule_b1_city_hop",
-    "rule_b3_overdraft_freeze",
-    "udf_vectorized_agg",
-    "dedup_exact",
-    "dedup_near_minhash",
-    "dedup_incremental",
-    "dedup_cluster_cc",
-    "sim_topk_cosine",
-    "text_stats",
-]
-
-# Headline-v2 (FROZEN round 8 — VERDICT r7 ask #7): the 14 operators
-# added after the original headline set froze, timed the same way and
-# summed into their OWN tracked total (`extras_total`) so a regression
-# here moves a recorded aggregate, while the 22-query total stays
-# comparable to BASELINE.md. Do not append here — new keys go in
-# FRESH_KEYS below until the next freeze.
-EXTRAS = [
-    "text_decontaminate",
-    "dedup_containment",
-    "agg_retention_cohort",
-    "profile_columns",
-    "sample_weighted_priority",
-    "dedup_paragraph",
-    "subquery_family",
-    "sim_topk_ivf_kmeans",
-    "sample_temperature_mix",
-    "win_anomaly_zscore",
-    "text_repetition_gopher",
-    "graph_triangle_count",
-    "win_ewma",
-    "dedup_semantic_cluster",
-]
-# Headline-v3 (FROZEN round 9 — VERDICT r8 ask #4): the round-8
-# additions graduate out of FRESH into their own tracked total
-# (`extras_v3_total`) so r10 regressions here move a recorded
-# aggregate. Do not append — new keys go in FRESH_KEYS until the next
-# freeze.
-EXTRAS_V3 = [
-    "stream_observe_metrics",
-    "stream_python_datasource",
-    "text_bpe_tokenize",
-]
-# Headline-v4 (FROZEN round 10 — VERDICT r9 ask #4): round 9's one
-# sanctioned key graduates out of FRESH into its own tracked total
-# (`extras_v4_total`). Its number is contract-verification-dominated
-# (the registered query runs the ANN path PLUS the exact all-pairs form
-# to grade recall) — expect it large but stable. Do not append — new
-# keys go in FRESH_KEYS until the next freeze.
-EXTRAS_V4 = [
-    "sim_maxsim_ann",
-]
-# Headline-v5 (FROZEN round 12): round 10's one sanctioned key
-# graduates out of FRESH into its own tracked total
-# (`extras_v5_total`). Its number is micro-batch-dominated — four real
-# foreachBatch probe+admit cycles per run — expect it large but stable.
-# Do not append — new keys go in FRESH_KEYS until the next freeze.
-EXTRAS_V5 = [
-    "stream_dedup_incremental",
-]
-# Headline-v6 (FROZEN round 13): round 12's one sanctioned key
-# graduates out of FRESH into its own tracked total
-# (`extras_v6_total`). Scan-dominated (pyavro seed read back through
-# the Python DataSource) — expect it small and stable. Do not append —
-# new keys go in FRESH_KEYS until the next freeze.
-EXTRAS_V6 = [
-    "scan_avro",
-]
-# Rolling pool for keys added THIS round: timed and reported, not yet
-# part of any frozen total (they graduate at the next freeze).
-FRESH_KEYS: list[str] = []
+# The timed blocks, in run order: (tag, keys, summary total field).
+# Headline: one representative per heavy operator family, cheap scan
+# first (warms the JVM/code paths). The extras blocks are FROZEN: each
+# holds the keys that graduated at one freeze and is summed into its own
+# tracked total, so a regression there moves a recorded aggregate while
+# the headline total stays comparable to BASELINE.md. Do not append to a
+# frozen block — new keys go in "fresh" (timed and reported, part of no
+# frozen total) until the next freeze adds a block.
+BLOCKS: tuple[tuple[str, tuple[str, ...], str], ...] = (
+    (
+        "headline",
+        (
+            "scan_parquet",
+            "agg_groupby",
+            "agg_rollup_cube_gsets",
+            "agg_maxby_latest",
+            "join_multiway",
+            "join_bucketed_colocated",
+            "join_skew_salted",
+            "join_asof_backward",
+            "join_range_banded",
+            "cdc_incremental_agg",
+            "topk_per_group",
+            "win_running_frame",
+            "win_range_interval",
+            "rule_b1_city_hop",
+            "rule_b3_overdraft_freeze",
+            "udf_vectorized_agg",
+            "dedup_exact",
+            "dedup_near_minhash",
+            "dedup_incremental",
+            "dedup_cluster_cc",
+            "sim_topk_cosine",
+            "text_stats",
+        ),
+        "value",
+    ),
+    (
+        "extra",
+        (
+            "text_decontaminate",
+            "dedup_containment",
+            "agg_retention_cohort",
+            "profile_columns",
+            "sample_weighted_priority",
+            "dedup_paragraph",
+            "subquery_family",
+            "sim_topk_ivf_kmeans",
+            "sample_temperature_mix",
+            "win_anomaly_zscore",
+            "text_repetition_gopher",
+            "graph_triangle_count",
+            "win_ewma",
+            "dedup_semantic_cluster",
+        ),
+        "extras_total",
+    ),
+    (
+        "extra-v3",
+        ("stream_observe_metrics", "stream_python_datasource", "text_bpe_tokenize"),
+        "extras_v3_total",
+    ),
+    # contract-verification-dominated: the registered query runs the ANN
+    # path PLUS the exact all-pairs form to grade recall
+    ("extra-v4", ("sim_maxsim_ann",), "extras_v4_total"),
+    # micro-batch-dominated: four real foreachBatch probe+admit cycles
+    ("extra-v5", ("stream_dedup_incremental",), "extras_v5_total"),
+    # scan-dominated: the pyavro seed read back through the DataSource
+    ("extra-v6", ("scan_avro",), "extras_v6_total"),
+    ("fresh", (), "fresh_total"),
+)
 
 
 def main() -> None:
@@ -133,9 +117,145 @@ def main() -> None:
     spark = get_spark("fintech-data-lake-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
+    prelude(spark, sf_dir, queries)
 
-    # Warm the JVM / codegen / file-index paths so the first timed query
-    # isn't charged session startup (we measure queries, not boot).
+    cal_sec = median_seconds(probe_cpu, spark, 5)
+    cal_ratio = round(cal_sec / _CAL_REF_SEC, 3)
+    shuf_sec = median_seconds(probe_shuffle, spark, 5)
+    shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
+    shuffle_attempts = [shuf_ratio]
+    while shuf_ratio > SHUF_DEGRADED and len(shuffle_attempts) < 4:
+        print(
+            f"# shuffle probe degraded (ratio {shuf_ratio:.2f} > "
+            f"{SHUF_DEGRADED}); waiting 20s and re-probing",
+            file=sys.stderr,
+        )
+        time.sleep(20)
+        shuf_sec = median_seconds(probe_shuffle, spark, 5)
+        shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
+        shuffle_attempts.append(shuf_ratio)
+    print(
+        f"# calibration: median {cal_sec:.3f}s (ref {_CAL_REF_SEC}s, "
+        f"ratio {cal_ratio:.2f}); shuffle {shuf_sec:.3f}s "
+        f"(ref {_SHUF_REF_SEC}s, ratio {shuf_ratio:.2f}, "
+        f"attempts {shuffle_attempts})",
+        file=sys.stderr,
+    )
+
+    guard = LeakGuard(spark)
+    timed: dict[str, dict[str, float]] = {}
+    block_cpu: dict[str, float] = {}
+    block_shuffle: dict[str, float] = {}
+    for tag, keys, _ in BLOCKS:
+        if keys:
+            block_cpu[tag], block_shuffle[tag] = block_probes(spark)
+        timed[tag] = time_block(spark, sf_dir, queries, tag, keys, guard)
+
+    # Re-probe AFTER the timed loops: background load arriving mid-run
+    # inflates late queries while the start-of-run probe shows an idle
+    # box. A post-ratio far above the pre-ratio marks the run as
+    # load-contaminated; normalization stays on the PRE ratio for
+    # cross-round comparability.
+    cal_post_sec = median_seconds(probe_cpu, spark, 5)
+    cal_post_ratio = round(cal_post_sec / _CAL_REF_SEC, 3)
+    shuf_post_sec = median_seconds(probe_shuffle, spark, 5)
+    shuf_post_ratio = round(shuf_post_sec / _SHUF_REF_SEC, 3)
+    print(
+        f"# calibration (post): median {cal_post_sec:.3f}s "
+        f"(ratio {cal_post_ratio:.2f}); shuffle {shuf_post_sec:.3f}s "
+        f"(ratio {shuf_post_ratio:.2f})",
+        file=sys.stderr,
+    )
+
+    sf_name = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
+    try:
+        sf = float(sf_name)
+    except ValueError:
+        sf = sf_name
+    summary = build_summary(
+        sf,
+        timed,
+        cal_ratio,
+        cal_post_ratio,
+        shuf_ratio,
+        shuf_post_ratio,
+        guard.cache_leaks,
+        len(shuffle_attempts) - 1,
+    )
+
+    def normalized(vals: dict[str, float]) -> dict[str, float]:
+        return {k: round(v / cal_ratio, 3) for k, v in vals.items()}
+
+    # detail name of a block: its summary field minus "_total"
+    named = {field[: -len("_total")]: timed[tag] for tag, _, field in BLOCKS[1:]}
+    detail = {
+        "detail": {
+            "calibration": {
+                "probe": "range(2e8) two-sum codegen, median of 5",
+                "sec": cal_sec,
+                "ref_sec": _CAL_REF_SEC,
+                "ratio": cal_ratio,
+                "post_sec": cal_post_sec,
+                "post_ratio": cal_post_ratio,
+                "shuffle_probe": "range(2e7) 64-part repartition sum,"
+                " median of 5",
+                "shuffle_sec": shuf_sec,
+                "shuffle_ref_sec": _SHUF_REF_SEC,
+                "shuffle_ratio": shuf_ratio,
+                "shuffle_post_sec": shuf_post_sec,
+                "shuffle_post_ratio": shuf_post_ratio,
+            },
+            "queries_normalized": normalized(timed["headline"]),
+            "extras": named["extras"],
+            "extras_total_normalized": round(
+                summary["extras_total"] / cal_ratio, 3
+            ),
+            **{name: vals for name, vals in named.items() if name != "extras"},
+            # per-key CPU-ratio normalization for cross-round comparison;
+            # shuffle degradation stays visible via the shuffle ratios.
+            # The first extras block was the headline's second version,
+            # hence its label "v2".
+            "extras_normalized": {
+                ("v2" if name == "extras" else name.removeprefix("extras_")):
+                normalized(vals)
+                for name, vals in named.items()
+            },
+            "shuffle_probe_attempts": shuffle_attempts,
+            "block_shuffle_ratios": block_shuffle,
+            "block_cpu_ratios": block_cpu,
+            "cache_leaks": guard.cache_leaks,
+            "resident_checkpoints_dropped": guard.resident_checkpoints,
+        }
+    }
+    # The bench's stdout is read from a TAIL capture, so a single giant
+    # JSON line loses its head. Emit the bulky per-key detail FIRST (its
+    # loss is tolerable), then the compact summary as the LAST, short
+    # line: a tail capture always keeps line ends, so the summary
+    # survives intact and stays parseable.
+    print(json.dumps(detail))
+    print(json.dumps(summary))
+    spark.stop()
+
+
+# Per-query MEDIAN of N_RUNS runs: single-shot timings on this box swing
+# +/-30% with background load; medians are what regressions are graded
+# against. A block total is the sum of its medians.
+N_RUNS = 3
+
+# Pre-run shuffle ratio above which the run waits 20 s and re-probes
+# (up to 3 times): transient co-tenant load often drains. The run
+# proceeds on the LAST probe either way, with the attempt trail recorded.
+SHUF_DEGRADED = 1.15
+
+
+def _median(runs: list[float]) -> float:
+    return round(sorted(runs)[len(runs) // 2], 3)
+
+
+def prelude(spark, sf_dir: str, queries: dict) -> None:
+    """Untimed warm-up, run before any probe or timed rep, so no timed
+    median is charged session startup or a one-time artifact build."""
+    # JVM / codegen / file-index paths
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
     # Pre-spawn the Arrow Python workers (one per core, reused afterwards via
@@ -167,27 +287,21 @@ def main() -> None:
 
     _bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")
     _bucketed_table(spark, sf_dir, "orders", "o_orderkey")
-    # The shared shingle index and its sibling memos are one-time
-    # derived artifacts (dedup.py::_SESSION_MEMOS: materialize once, fan
-    # every dedup strategy out from them); warm ALL of them here so no
-    # memo populates lazily inside a timed rep — the leak guard below
-    # snapshots the sanctioned persistent-RDD set ONCE, so a mid-rep
-    # memo would be unpersisted after rep 1 and silently recomputed
-    # every later rep (ADVICE r14; r4's dedup_near_minhash 0.73->1.26 s
-    # swing was the un-warmed variant of the same mistake). The registry
-    # lives next to the memo dicts, so a new memo is warmed here without
-    # this file changing.
+    # The shared shingle index and its sibling memos are one-time derived
+    # artifacts (dedup.py::_SESSION_MEMOS). Warm ALL of them here: the
+    # LeakGuard snapshots the sanctioned persistent-RDD set once, after
+    # this prelude, so a memo populated inside a timed rep would be
+    # unpersisted after rep 1 and silently recomputed every later rep.
     from fintech_data_lake_as_code_spark.operators.dedup import (
         warm_session_memos,
     )
 
     warm_session_memos(spark, sf_dir)
     # Seed the streaming landing zones untimed: a fingerprint-forced
-    # reseed (io/dedup derivation change since the last seed) is a
-    # one-time landing write that would otherwise land inside the first
-    # timed run of whichever streaming key touches it first — the
-    # r10 extras_v3 contamination suspect. Marker-guarded, so when the
-    # seeds are current these cost one marker read each.
+    # reseed is a one-time landing write that would otherwise land inside
+    # the first timed run of whichever streaming key touches it first.
+    # Marker-guarded, so when the seeds are current these cost one marker
+    # read each.
     from fintech_data_lake_as_code_spark.streaming.queries import (
         _docs_json_dir,
         _events_json_dir,
@@ -203,290 +317,117 @@ def main() -> None:
         "noop"
     ).save()
 
-    # Noise calibration: a fixed, IO-free, pure-codegen probe timed before
-    # the headline loop. Its runtime depends only on the box's available
-    # CPU at bench time, never on engine code, so round-over-round its
-    # ratio to CAL_REF_SEC separates sandbox load (uniform inflation of
-    # everything, calibration included) from real regressions (one query
-    # moves, calibration doesn't). CAL_REF_SEC is the median measured on
-    # an idle local[32] box; `calibration_ratio` ~1.0 means comparable
-    # conditions, and `queries_normalized` rescales each median by the
-    # ratio for cross-round comparison.
-    CAL_REF_SEC = _CAL_REF_SEC
 
-    def _calibrate() -> float:
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(200_000_000).selectExpr(
-                "sum(id % 7)", "sum(id * 3 + 1)"
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        return round(sorted(runs)[len(runs) // 2], 3)
+# Noise calibration: two fixed, IO-free probes whose runtime depends only
+# on the box's available CPU / shuffle service, never on engine code.
+# Their ratios to _CAL_REF_SEC / _SHUF_REF_SEC separate box load (uniform
+# inflation of everything, probes included) from real regressions (one
+# query moves, the probes don't).
 
-    def _calibrate_shuffle() -> float:
-        # one full shuffle write+fetch cycle (64 map x 64 reduce over
-        # 20M longs): times the shuffle-file service the CPU probe
-        # can't see. Same median-of-5 discipline.
-        runs = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            spark.range(20_000_000).repartition(64, "id").selectExpr(
-                "sum(id)"
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        return round(sorted(runs)[len(runs) // 2], 3)
 
-    cal_sec = _calibrate()
-    cal_ratio = round(cal_sec / CAL_REF_SEC, 3)
-    # Degraded-box retry (VERDICT r13 #5): two consecutive rounds were
-    # recorded on shuffle-degraded boxes (pre-ratios 1.26, 1.39) and
-    # every cross-round per-key comparison needed manual normalization.
-    # When the pre-run shuffle probe exceeds the threshold, wait and
-    # re-probe (transient co-tenant load often drains); the run proceeds
-    # on the LAST probe either way, with the full attempt trail recorded
-    # so a still-degraded run is self-describing in the artifact.
-    SHUF_DEGRADED = 1.15
-    shuf_sec = _calibrate_shuffle()
-    shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
-    shuffle_attempts = [shuf_ratio]
-    while shuf_ratio > SHUF_DEGRADED and len(shuffle_attempts) < 4:
-        print(
-            f"# shuffle probe degraded (ratio {shuf_ratio:.2f} > "
-            f"{SHUF_DEGRADED}); waiting 20s and re-probing",
-            file=sys.stderr,
-        )
-        time.sleep(20)
-        shuf_sec = _calibrate_shuffle()
-        shuf_ratio = round(shuf_sec / _SHUF_REF_SEC, 3)
-        shuffle_attempts.append(shuf_ratio)
-    print(
-        f"# calibration: median {cal_sec:.3f}s (ref {CAL_REF_SEC}s, "
-        f"ratio {cal_ratio:.2f}); shuffle {shuf_sec:.3f}s "
-        f"(ref {_SHUF_REF_SEC}s, ratio {shuf_ratio:.2f}, "
-        f"attempts {shuffle_attempts})",
-        file=sys.stderr,
-    )
+def probe_cpu(spark) -> None:
+    """Pure-codegen probe: range(2e8) two-sum."""
+    spark.range(200_000_000).selectExpr(
+        "sum(id % 7)", "sum(id * 3 + 1)"
+    ).collect()
 
-    # Cache-leak guard (VERDICT r13 #2): a timed median must never ride
-    # CacheManager reuse of blocks a previous rep leaked — that is
-    # exactly how r11 recorded 1.72 s for graph_triangle_count whose
-    # honest cold cost is ~3.4 s, burning two rounds of adjudication.
-    # Everything persisted by the untimed prelude above (the shared
-    # shingle artifacts, bucketed-layout machinery) is SANCTIONED
-    # session-lifetime reuse; any persistent RDD a timed rep leaves
-    # behind beyond that set is dropped before the next rep starts and
-    # the key is named in the summary's `cache_leaks`.
-    def _persistent_ids() -> set[int]:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
 
-    sanctioned = _persistent_ids()
-    cache_leaks: dict[str, int] = {}
-    resident_checkpoints: dict[str, int] = {}
+def probe_shuffle(spark) -> None:
+    """One full shuffle write+fetch cycle (64 map x 64 reduce over 20M
+    longs): times the shuffle-file service the CPU probe can't see."""
+    spark.range(20_000_000).repartition(64, "id").selectExpr(
+        "sum(id)"
+    ).collect()
 
-    def _leak_guard(key: str) -> None:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+
+def median_seconds(probe, spark, reps: int) -> float:
+    """Median wall seconds of `reps` runs of a probe."""
+    runs = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        probe(spark)
+        runs.append(time.perf_counter() - t0)
+    return _median(runs)
+
+
+def block_probes(spark) -> tuple[float, float]:
+    """(cpu_ratio, shuffle_ratio) of one block: median of 3 quick reps
+    per probe. A run-wide pre/post pair can't localize WHICH block ran
+    under mid-run load; single shots spread with one GC pause, which the
+    median suppresses."""
+    shuf = median_seconds(probe_shuffle, spark, 3)
+    cpu = median_seconds(probe_cpu, spark, 3)
+    return round(cpu / _CAL_REF_SEC, 3), round(shuf / _SHUF_REF_SEC, 3)
+
+
+class LeakGuard:
+    """Keeps a timed median from riding CacheManager reuse of blocks a
+    previous rep leaked (a leaked cache once halved a recorded median).
+
+    Everything persisted before construction (the prelude's shared
+    artifacts) is SANCTIONED session-lifetime reuse. After each timed
+    rep, every other persistent RDD is dropped and counted against the
+    key: in `cache_leaks`, or in `resident_checkpoints` when it is a
+    localCheckpoint block backing a RETURNED result (the CC/PageRank
+    loops' final round) — the result's own storage, not a leak, so
+    `cache_leaks` stays the pure alarm signal."""
+
+    def __init__(self, spark) -> None:
+        self._jsc = spark.sparkContext._jsc
+        self.sanctioned = {
+            int(k) for k in self._jsc.getPersistentRDDs().keySet().toArray()
+        }
+        self.cache_leaks: dict[str, int] = {}
+        self.resident_checkpoints: dict[str, int] = {}
+
+    def __call__(self, key: str) -> None:
+        jmap = self._jsc.getPersistentRDDs()
         for k in jmap.keySet().toArray():
-            if int(k) in sanctioned:
+            if int(k) in self.sanctioned:
                 continue
             jrdd = jmap.get(k)
-            # localCheckpoint blocks backing a RETURNED result (the CC/
-            # PageRank loops' final round) are the result's own storage,
-            # not a cache leak — dropped all the same (bounded storage,
-            # and the next rep must not find them) but reported apart so
-            # cache_leaks stays the pure alarm signal
             bucket = (
-                resident_checkpoints
+                self.resident_checkpoints
                 if jrdd.rdd().isLocallyCheckpointed()
-                else cache_leaks
+                else self.cache_leaks
             )
             jrdd.unpersist(False)
             bucket[key] = bucket.get(key, 0) + 1
 
-    # Per-query MEDIAN of N_RUNS runs: single-shot timings on this box swing
-    # +/-30% with background load; medians are what regressions are graded
-    # against. Total = sum of medians.
-    N_RUNS = 3
 
-    # One cheap shuffle probe per block (VERDICT r14 #6): the late
-    # blocks are where mid-run service degradation lands (the r14
-    # v5/v4 numbers were exactly this), and a run-wide pre/post pair
-    # can't localize WHICH block ran degraded. Median of 3 quick reps,
-    # not the run-wide median-of-5 — it contextualizes the block while
-    # the run-wide pair stays the signal. (r15/r16 ran this single-shot
-    # and the `extra` block read ~1.9 on two otherwise-clean days while
-    # idle single shots spread 0.89–1.2 s — a one-GC-pause artifact the
-    # median suppresses; ~2 s extra untimed cost per block.)
-    block_shuffle: dict[str, float] = {}
-    # Per-block CPU ratios (round 18): adjudication rules key off blocks
-    # "clean on BOTH probe axes" (the triangle reopen rule), but until
-    # now only SHUFFLE was probed per-block — CPU had just the run-wide
-    # pre/post pair, so a mid-run CPU squeeze (r18 run 3: pre 0.683,
-    # post 1.294) could not be pinned to the block it actually hit.
-    # Same median-of-3 discipline; ~0.5 s untimed cost per block.
-    block_cpu: dict[str, float] = {}
-
-    def _probe_shuffle_once() -> float:
+def time_key(
+    spark, sf_dir: str, key: str, fn, guard: LeakGuard, reps: int = N_RUNS
+) -> list[float]:
+    """Wall seconds of `reps` full executions of one query into a noop
+    sink (scan+shuffle+compute, nothing collected), with the leak guard
+    after each rep."""
+    runs = []
+    for _ in range(reps):
         t0 = time.perf_counter()
-        spark.range(20_000_000).repartition(64, "id").selectExpr(
-            "sum(id)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        runs.append(time.perf_counter() - t0)
+        guard(key)
+    return runs
 
-    def _probe_cpu_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr(
-            "sum(id % 7)", "sum(id * 3 + 1)"
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
 
-    def _time_block(keys: list[str], tag: str) -> dict[str, float]:
-        out: dict[str, float] = {}
-        if keys:
-            reps = sorted(_probe_shuffle_once() for _ in range(3))
-            block_shuffle[tag] = round(reps[1] / _SHUF_REF_SEC, 3)
-            cpu_reps = sorted(_probe_cpu_once() for _ in range(3))
-            block_cpu[tag] = round(cpu_reps[1] / CAL_REF_SEC, 3)
-        for key in keys:
-            fn = queries.get(key)
-            if fn is None:
-                continue
-            runs = []
-            for _ in range(N_RUNS):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-                _leak_guard(key)
-            out[key] = round(sorted(runs)[len(runs) // 2], 3)
-            print(
-                f"# {tag} {key}: median {out[key]:.3f}s of "
-                + "/".join(f"{r:.3f}" for r in runs),
-                file=sys.stderr,
-            )
-        return out
-
-    # The headline block rides the SAME per-block probe path as the
-    # extras (ADVICE r18): until r19 the headline keys were timed by a
-    # separate loop that block_shuffle_ratios/block_cpu_ratios never
-    # covered, so BASELINE.md's per-block adjudication of headline
-    # readings had to be inferred from the run-wide pre-cal alone.
-    timings = _time_block(HEADLINE, "headline")
-    total = round(sum(timings.values()), 3)
-
-    extras = _time_block(EXTRAS, "extra")
-    extras_total = round(sum(extras.values()), 3)
-    extras_v3 = _time_block(EXTRAS_V3, "extra-v3")
-    extras_v3_total = round(sum(extras_v3.values()), 3)
-    extras_v4 = _time_block(EXTRAS_V4, "extra-v4")
-    extras_v4_total = round(sum(extras_v4.values()), 3)
-    extras_v5 = _time_block(EXTRAS_V5, "extra-v5")
-    extras_v5_total = round(sum(extras_v5.values()), 3)
-    extras_v6 = _time_block(EXTRAS_V6, "extra-v6")
-    extras_v6_total = round(sum(extras_v6.values()), 3)
-    fresh = _time_block(FRESH_KEYS, "fresh")
-
-    # Re-probe AFTER the timed loops: background load arriving mid-run
-    # inflates late queries while the start-of-run probe shows an idle
-    # box (observed in round 8: last headline keys +2x while early keys
-    # were flat). A post-ratio far above the pre-ratio marks the run as
-    # load-contaminated; normalization stays on the PRE ratio for
-    # cross-round comparability.
-    cal_post_sec = _calibrate()
-    cal_post_ratio = round(cal_post_sec / CAL_REF_SEC, 3)
-    shuf_post_sec = _calibrate_shuffle()
-    shuf_post_ratio = round(shuf_post_sec / _SHUF_REF_SEC, 3)
-    print(
-        f"# calibration (post): median {cal_post_sec:.3f}s "
-        f"(ratio {cal_post_ratio:.2f}); shuffle {shuf_post_sec:.3f}s "
-        f"(ratio {shuf_post_ratio:.2f})",
-        file=sys.stderr,
-    )
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    try:
-        sf = float(sf_name)
-    except ValueError:
-        sf = sf_name
-    detail = {
-        "detail": {
-            "calibration": {
-                "probe": "range(2e8) two-sum codegen, median of 5",
-                "sec": cal_sec,
-                "ref_sec": CAL_REF_SEC,
-                "ratio": cal_ratio,
-                "post_sec": cal_post_sec,
-                "post_ratio": cal_post_ratio,
-                "shuffle_probe": "range(2e7) 64-part repartition sum,"
-                " median of 5",
-                "shuffle_sec": shuf_sec,
-                "shuffle_ref_sec": _SHUF_REF_SEC,
-                "shuffle_ratio": shuf_ratio,
-                "shuffle_post_sec": shuf_post_sec,
-                "shuffle_post_ratio": shuf_post_ratio,
-            },
-            "queries_normalized": {
-                k: round(v / cal_ratio, 3) for k, v in timings.items()
-            },
-            "extras": extras,
-            "extras_total_normalized": round(extras_total / cal_ratio, 3),
-            "extras_v3": extras_v3,
-            "extras_v4": extras_v4,
-            "extras_v5": extras_v5,
-            "extras_v6": extras_v6,
-            "fresh": fresh,
-            # per-key normalized extras (VERDICT r13 #5): cross-round
-            # per-key comparison on a loaded box previously required
-            # hand-dividing each raw value; same CPU-ratio normalization
-            # as queries_normalized (shuffle-degradation remains visible
-            # via the shuffle ratios — normalize by those judiciously,
-            # they are I/O-specific)
-            "extras_normalized": {
-                blk: {k: round(v / cal_ratio, 3) for k, v in vals.items()}
-                for blk, vals in (
-                    ("v2", extras),
-                    ("v3", extras_v3),
-                    ("v4", extras_v4),
-                    ("v5", extras_v5),
-                    ("v6", extras_v6),
-                    ("fresh", fresh),
-                )
-            },
-            "shuffle_probe_attempts": shuffle_attempts,
-            "block_shuffle_ratios": block_shuffle,
-            "block_cpu_ratios": block_cpu,
-            "cache_leaks": cache_leaks,
-            "resident_checkpoints_dropped": resident_checkpoints,
-        }
-    }
-    summary = build_summary(
-        sf,
-        timings,
-        total,
-        cal_ratio,
-        extras_total,
-        extras_v3_total,
-        extras_v4_total,
-        extras_v5_total,
-        fresh,
-        cal_post_ratio,
-        shuf_ratio,
-        shuf_post_ratio,
-        extras_v6_total,
-        cache_leaks=cache_leaks,
-        shuffle_probe_retries=len(shuffle_attempts) - 1,
-    )
-    # The driver keeps only the TAIL of stdout, so a single giant JSON
-    # line loses its head — exactly what nulled BENCH_r08's "value"
-    # (VERDICT r8 #3). Emit the bulky per-key detail FIRST (its loss is
-    # tolerable), then the compact driver-contract summary as the LAST,
-    # short line: a tail capture always keeps line ends, so the summary
-    # survives intact and stays parseable.
-    print(json.dumps(detail))
-    print(json.dumps(summary))
-    spark.stop()
+def time_block(
+    spark, sf_dir: str, queries: dict, tag: str, keys, guard: LeakGuard
+) -> dict[str, float]:
+    """Per-key median of N_RUNS timed reps; unregistered keys are
+    skipped (tests pin every block key to the registry)."""
+    out: dict[str, float] = {}
+    for key in keys:
+        fn = queries.get(key)
+        if fn is None:
+            continue
+        runs = time_key(spark, sf_dir, key, fn, guard)
+        out[key] = _median(runs)
+        print(
+            f"# {tag} {key}: median {out[key]:.3f}s of "
+            + "/".join(f"{r:.3f}" for r in runs),
+            file=sys.stderr,
+        )
+    return out
 
 
 # Conservative bound on the driver's tail capture; the real window is
@@ -497,69 +438,49 @@ SUMMARY_LINE_BUDGET = 4096
 
 def build_summary(
     sf,
-    timings: dict[str, float],
-    total: float,
+    timed: dict[str, dict[str, float]],
     cal_ratio: float,
-    extras_total: float,
-    extras_v3_total: float,
-    extras_v4_total: float,
-    extras_v5_total: float,
-    fresh: dict[str, float],
-    cal_post_ratio: float | None = None,
-    shuffle_ratio: float | None = None,
-    shuffle_post_ratio: float | None = None,
-    extras_v6_total: float | None = None,
-    cache_leaks: dict[str, int] | None = None,
-    shuffle_probe_retries: int | None = None,
+    cal_post_ratio: float,
+    shuffle_ratio: float,
+    shuffle_post_ratio: float,
+    cache_leaks: dict[str, int],
+    shuffle_probe_retries: int,
 ) -> dict:
     """The compact driver-contract result: everything the per-round
-    BENCH artifact must retain, and nothing bulky. Must stay within
-    SUMMARY_LINE_BUDGET when JSON-encoded (test-pinned) so the driver's
-    tail capture can never truncate the headline value again.
+    BENCH artifact must retain, and nothing bulky. `timed` maps each
+    BLOCKS tag to its per-key medians. Must stay within
+    SUMMARY_LINE_BUDGET when JSON-encoded (test-pinned) so a tail
+    capture can never truncate the headline value.
 
-    `calibration_post_ratio` is the end-of-run load probe: when it sits
-    far above `calibration_ratio`, background load arrived mid-run and
-    the LATE blocks (extras_v3/v4, fresh) are inflated while the early
-    headline stays flat — the exact r10 signature. It must live in the
-    summary, not the detail line, because the detail's head is what the
-    driver's tail capture truncates (r10's post-ratio was lost that
-    way, which is why the r10 extras regression took a round to
-    adjudicate)."""
+    `calibration_post_ratio` is the end-of-run load probe: far above
+    `calibration_ratio` means background load arrived mid-run and the
+    LATE blocks are inflated while the early headline stays flat. The
+    shuffle ratios (pre/post) cover degraded shuffle/disk I/O that the
+    CPU ratios are blind to. `cache_leaks` names keys whose timed reps
+    left persistent RDDs behind; it MUST be {} on a healthy run.
+    `shuffle_probe_retries` (omitted when 0) counts the re-probes of a
+    degraded pre-run shuffle probe."""
+    totals = {
+        field: round(sum(timed[tag].values()), 3) for tag, _, field in BLOCKS
+    }
+    total = totals.pop("value")
+    # extras_v6_total joined the line after fresh_total; the line's key
+    # order is part of the contract
+    totals["extras_v6_total"] = totals.pop("extras_v6_total")
     out = {
         "metric": "headline_queries_wall_clock",
-        "value": round(total, 3),
+        "value": total,
         "unit": "sec",
-        "queries": timings,
+        "queries": timed["headline"],
         "sf": sf,
         "value_normalized": round(total / cal_ratio, 3),
         "calibration_ratio": cal_ratio,
-        "extras_total": extras_total,
-        "extras_v3_total": extras_v3_total,
-        "extras_v4_total": extras_v4_total,
-        "extras_v5_total": extras_v5_total,
-        "fresh_total": round(sum(fresh.values()), 3),
+        **totals,
+        "calibration_post_ratio": cal_post_ratio,
+        "calibration_shuffle_ratio": shuffle_ratio,
+        "calibration_shuffle_post_ratio": shuffle_post_ratio,
+        "cache_leaks": cache_leaks,
     }
-    if extras_v6_total is not None:
-        out["extras_v6_total"] = extras_v6_total
-    if cal_post_ratio is not None:
-        out["calibration_post_ratio"] = cal_post_ratio
-    # shuffle-service ratios (pre/post): the CPU ratios above are blind
-    # to degraded shuffle/disk I/O — these ride the tail-safe summary so
-    # a "uniform shuffle-key inflation, flat CPU probe" round is
-    # adjudicable from the artifact alone (environment, not regression)
-    if shuffle_ratio is not None:
-        out["calibration_shuffle_ratio"] = shuffle_ratio
-    if shuffle_post_ratio is not None:
-        out["calibration_shuffle_post_ratio"] = shuffle_post_ratio
-    # cache_leaks (VERDICT r13 #2): keys whose timed reps left persistent
-    # RDDs behind (count of dropped RDDs per key) — nonempty means those
-    # medians were guarded against CacheManager reuse but the operator
-    # has a release bug to fix. MUST be {} on a healthy run.
-    if cache_leaks is not None:
-        out["cache_leaks"] = cache_leaks
-    # >0 means the pre-run shuffle probe was degraded and the run waited
-    # and re-probed (VERDICT r13 #5); the final ratio above is what the
-    # run proceeded on.
     if shuffle_probe_retries:
         out["shuffle_probe_retries"] = shuffle_probe_retries
     return out

@@ -403,7 +403,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU-budget repartition of events on user_id (to satisfy both
     # _latest_state groupBys and the snapshot⋈batch join) was a
     # consistent 1.25–3.0x interleaved-A/B REGRESSION (6/6 pairs slower,
-    # median ratio 1.87; scripts/ab_cdc_spread.py) and read 1.1–1.4 s vs
+    # median ratio 1.87; OPTIMIZATION_r22.md) and read 1.1–1.4 s vs
     # the 0.74 s baseline in the full bench. The spread shuffles RAW
     # events — including the JSON props column — to replace what are
     # tiny partial-aggregated exchanges; the map side already reduces

@@ -571,13 +571,6 @@ def _dvec(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _spread_vecs(df: DataFrame) -> DataFrame:
-    """CPU-budget repartition for vector corpora (see _emb_corpus note;
-    shared shape with similarity._spread). r22: gated on the observed
-    scan layout (io.cpu_spread) — pass through when already wide."""
-    return cpu_spread(df, "vec_id")
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -615,7 +608,7 @@ def _emb_corpus(
     # cross-row reduce, so partitioning cannot move a result.
     both = base.unionByName(twins)
     if spread:
-        both = _spread_vecs(both)
+        both = cpu_spread(both, "vec_id")
     return both.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 

@@ -70,36 +70,61 @@ def test_embeddings_contract(spark, sf_dir):
     assert r.n_dims == 1, "embedding dimensionality is not uniform"
 
 
+# build_summary's output for _SUMMARY_INPUTS, captured from the
+# version that took one parameter per block total. The bench summary
+# line is a byte contract: same fields, same order, same rounding.
+_SUMMARY_INPUTS = {
+    "headline": {"scan_parquet": 0.1, "agg_groupby": 0.2, "join_multiway": 12.345},
+    "extra": {"profile_columns": 1.1, "win_ewma": 2.2},
+    "extra-v3": {"text_bpe_tokenize": 4.4444},
+    "extra-v4": {"sim_maxsim_ann": 5.0},
+    "extra-v5": {"stream_dedup_incremental": 6.0},
+    "extra-v6": {"scan_avro": 0.7},
+    "fresh": {"fresh_a": 0.05, "fresh_b": 0.0051},
+}
+_SUMMARY_HEAD = (
+    '{"metric": "headline_queries_wall_clock", "value": 12.645, '
+    '"unit": "sec", "queries": {"scan_parquet": 0.1, "agg_groupby": 0.2, '
+    '"join_multiway": 12.345}, "sf": 0.1, "value_normalized": 8.962, '
+    '"calibration_ratio": 1.411, "extras_total": 3.3, '
+    '"extras_v3_total": 4.444, "extras_v4_total": 5.0, '
+    '"extras_v5_total": 6.0, "fresh_total": 0.055, "extras_v6_total": 0.7, '
+    '"calibration_post_ratio": 1.502, "calibration_shuffle_ratio": 1.234, '
+    '"calibration_shuffle_post_ratio": 1.3, '
+)
+_SUMMARY_LOADED = (
+    _SUMMARY_HEAD
+    + '"cache_leaks": {"graph_triangle_count": 2}, "shuffle_probe_retries": 1}'
+)
+_SUMMARY_HEALTHY = _SUMMARY_HEAD + '"cache_leaks": {}}'
+
+
 def test_bench_summary_line_stays_tail_safe():
-    # VERDICT r8 #3: the BENCH artifact is parsed from a TAIL capture of
-    # bench.py's stdout, so the LAST line must be the compact summary
-    # and must stay short. Build the summary exactly as bench.py does,
-    # with every headline/extras/fresh key populated at worst-case float
-    # widths, and pin the encoded size under the budget.
+    # The BENCH artifact is parsed from a TAIL capture of bench.py's
+    # stdout, so the LAST line must be the compact summary, must keep
+    # its exact shape, and must stay short.
     import json
 
     import bench
 
-    fat = {k: 123.456 for k in bench.HEADLINE}
+    loaded = bench.build_summary(
+        0.1, _SUMMARY_INPUTS, 1.411, 1.502, 1.234, 1.3,
+        {"graph_triangle_count": 2}, 1,
+    )
+    assert json.dumps(loaded) == _SUMMARY_LOADED
+    # a healthy run emits cache_leaks={} and omits the retry count
+    healthy = bench.build_summary(
+        0.1, _SUMMARY_INPUTS, 1.411, 1.502, 1.234, 1.3, {}, 0
+    )
+    assert json.dumps(healthy) == _SUMMARY_HEALTHY
+
+    # Worst case for the budget: every block key populated at wide float
+    # widths, EVERY headline key leaked every rep, and the shuffle probe
+    # retried to exhaustion — the summary must still fit.
+    fat = {tag: {k: 123.456 for k in keys} for tag, keys, _ in bench.BLOCKS}
     summary = bench.build_summary(
-        sf=0.1,
-        timings=fat,
-        total=sum(fat.values()),
-        cal_ratio=0.123,
-        extras_total=1234.567,
-        extras_v3_total=1234.567,
-        extras_v4_total=1234.567,
-        extras_v5_total=1234.567,
-        fresh={k: 123.456 for k in bench.FRESH_KEYS},
-        cal_post_ratio=12.345,
-        shuffle_ratio=12.345,
-        shuffle_post_ratio=12.345,
-        extras_v6_total=1234.567,
-        # worst case: EVERY headline key leaked every rep, and the
-        # shuffle probe retried to exhaustion — the summary must still
-        # fit the tail budget
-        cache_leaks={k: 99 for k in bench.HEADLINE},
-        shuffle_probe_retries=3,
+        0.1, fat, 0.123, 12.345, 12.345, 12.345,
+        {k: 99 for k in fat["headline"]}, 3,
     )
     line = json.dumps(summary)
     assert len(line) < bench.SUMMARY_LINE_BUDGET, len(line)
@@ -123,46 +148,41 @@ def test_bench_summary_line_stays_tail_safe():
         "shuffle_probe_retries",
     ):
         assert field in parsed, field
-    # a healthy run emits cache_leaks={} and omits the retry count
-    healthy = bench.build_summary(
-        sf=0.1,
-        timings=fat,
-        total=sum(fat.values()),
-        cal_ratio=1.0,
-        extras_total=1.0,
-        extras_v3_total=1.0,
-        extras_v4_total=1.0,
-        extras_v5_total=1.0,
-        fresh={},
-        cache_leaks={},
-        shuffle_probe_retries=0,
-    )
-    assert healthy["cache_leaks"] == {}
-    assert "shuffle_probe_retries" not in healthy
 
 
 def test_bench_key_lists_exist_in_registry():
     # bench.py skips unknown keys silently (queries.get -> continue), so
     # a renamed/deleted key would just vanish from the timed totals and
-    # the regression record with it. Every frozen bench list must stay a
-    # subset of the registry, and the frozen lists must stay disjoint
-    # (a key timed twice would double-count in its block's total).
+    # the regression record with it. Every bench block must stay a
+    # subset of the registry, and the blocks must stay disjoint (a key
+    # timed twice would double-count in its block's total).
     import bench
     from fintech_data_lake_as_code_spark.registry import registry
 
     keys = set(registry())
-    lists = {
-        "HEADLINE": bench.HEADLINE,
-        "EXTRAS": bench.EXTRAS,
-        "EXTRAS_V3": bench.EXTRAS_V3,
-        "EXTRAS_V4": bench.EXTRAS_V4,
-        "EXTRAS_V5": bench.EXTRAS_V5,
-        "EXTRAS_V6": bench.EXTRAS_V6,
-        "FRESH_KEYS": bench.FRESH_KEYS,
-    }
-    for name, block in lists.items():
+    all_keys = []
+    for tag, block, _total in bench.BLOCKS:
         missing = set(block) - keys
-        assert not missing, f"{name} names unregistered keys: {missing}"
-        assert len(block) == len(set(block)), f"{name} has duplicates"
-    all_keys = [k for block in lists.values() for k in block]
-    assert len(all_keys) == len(set(all_keys)), "a key appears in two blocks"
+        assert not missing, f"{tag} names unregistered keys: {missing}"
+        all_keys.extend(block)
+    assert len(all_keys) == len(set(all_keys)), "a key is timed twice"
+
+
+def test_bench_prelude_and_block_timer_smoke(spark, sf_dir):
+    # bench.py's shared measurement path end to end on one cheap key:
+    # the untimed prelude, the per-block probe pair, and one timed block
+    # under the leak guard.
+    import bench
+    from fintech_data_lake_as_code_spark.registry import all_queries
+
+    queries = all_queries()
+    bench.prelude(spark, sf_dir, queries)
+    guard = bench.LeakGuard(spark)
+    cpu_ratio, shuffle_ratio = bench.block_probes(spark)
+    timed = bench.time_block(
+        spark, sf_dir, queries, "smoke", ["scan_parquet"], guard
+    )
+    assert timed["scan_parquet"] > 0
+    assert guard.cache_leaks == {}
+    for ratio in (cpu_ratio, shuffle_ratio):
+        assert isinstance(ratio, float) and ratio > 0
